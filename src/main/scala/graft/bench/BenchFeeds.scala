@@ -36,6 +36,20 @@ object BenchFeeds {
   private val feedCleanup =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Removes `dir`'s whole tree on JVM exit, deepest entries first
+    * (streaming checkpoints and outputs nest directories). */
+  private def deleteOnExit(dir: String): Unit =
+    if (feedCleanup.add(dir))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+        val root = java.nio.file.Paths.get(dir)
+        if (java.nio.file.Files.exists(root)) {
+          val all = java.nio.file.Files.walk(root)
+          try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+            .forEach(p => { p.toFile.delete(); () })
+          finally all.close()
+        }
+      }))
+
   /** One /tmp parquet dir per (tag, data dir, JVM): pid-suffixed so
     * concurrent runs never share, removed on JVM exit, rebuilt by
     * `write` unless parquet's `_SUCCESS` marker is present (a write
@@ -48,12 +62,7 @@ object BenchFeeds {
       .digest(d.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val pid = ProcessHandle.current().pid()
     val dir = s"/tmp/graft_${tag}_${safe}_${full}_$pid"
-    if (feedCleanup.add(dir))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val root = new java.io.File(dir)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete(); ()
-      }))
+    deleteOnExit(dir)
     if (!new java.io.File(dir, "_SUCCESS").isFile) write(dir)
     dir
   }
@@ -109,12 +118,7 @@ object BenchFeeds {
   def scratchDir(tag: String): String = {
     val dir = s"/tmp/graft_${tag}_${ProcessHandle.current().pid()}" +
       s"_${streamRuns.incrementAndGet()}"
-    if (feedCleanup.add(dir))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val root = new java.io.File(dir)
-        Option(root.listFiles()).foreach(_.foreach(_.delete()))
-        root.delete(); ()
-      }))
+    deleteOnExit(dir)
     dir
   }
 

@@ -115,6 +115,14 @@ object Lab {
         val (b1, s1) = ticks()
         val st = if (b1 - b0 + s1 - s0 > 0)
           100.0 * (s1 - s0) / (b1 - b0 + s1 - s0) else 0.0
+        // the pass's last onJobEnd events may still be on the listener
+        // bus: let them land before the log is printed or cleared
+        if (jobLog.isDefined)
+          try org.apache.spark.GraftBusDrain(spark.sparkContext, 30000)
+          catch {
+            case e: java.util.concurrent.TimeoutException =>
+              System.err.println(s"[lab] listener bus not drained: $e")
+          }
         System.err.println(f"[lab] $n pass: $dt%.2fs steal=$st%.1f%%")
         if (i == reps) jobLog.foreach { q =>
           import scala.jdk.CollectionConverters._

@@ -227,17 +227,30 @@ final case class PgWalPartition(dir: String, start: Checkpoint,
     end: Checkpoint, tablesRegex: Option[String],
     plugin: String = "pgoutput") extends InputPartition
 
+/** Reads one micro-batch window `(start, end]` of the feed, doing work
+  * proportional to the window, not to the feed:
+  *  - start: every segment strictly below the one that contains
+  *    `start` is pruned (PG WAL restart_lsn semantics); the containing
+  *    segment is replayed from its first frame and the replay gate
+  *    drops already-delivered events inside it. Pruned segments may
+  *    still hold the only Relation declarations for rows decoded later,
+  *    so their 'R' frames feed the decoder first (state-only, cached
+  *    per JVM by [[WalFiles.warmRelations]]).
+  *  - end: the replay stops at the first event whose checkpoint is
+  *    after `end` — before the window and table filters, so a filtered
+  *    table cannot keep it reading. No frame past that event is decoded
+  *    and no later segment is read. There is deliberately no pruning of
+  *    segments named above `end.lsn`: a segment can open with the
+  *    continuation frames of a transaction begun in the previous one,
+  *    whose rows sit at or below `end`. The event-driven stop costs at
+  *    most the head of one extra segment and relies only on feed order
+  *    being checkpoint order, which [[WalTail.bounded]] and the start
+  *    pruning already assume. */
 final class PgWalPartitionReader(p: PgWalPartition)
     extends PartitionReader[InternalRow] {
 
   private val pattern = p.tablesRegex.map(_.r.pattern)
 
-  // Segment pruning: drop every segment strictly below the one that
-  // contains the start checkpoint (PG WAL restart_lsn semantics); the
-  // replay gate below drops already-delivered messages inside it.
-  // Pruned segments may still hold the only Relation declarations for
-  // rows decoded later, so they are replayed in state-only mode first
-  // ('R' frames feed the decoder, nothing is emitted).
   private val (prunedSegs, liveSegs) = {
     val all = WalFiles.segments(p.dir)
     val keepFrom = all.lastIndexWhere { case (first, _) =>
@@ -257,10 +270,12 @@ final class PgWalPartitionReader(p: PgWalPartition)
   private val tally = new WalFiles.SkipTally
 
   private val it = WalFiles.replay(liveSegs, decoder, tally = tally,
-      tallyFrom = p.start)
-    .filter(e => e.cp.after(p.start) && !e.cp.after(p.end))
+      tallyFrom = p.start, tallyTo = p.end)
+    .takeWhile(e => !e.cp.after(p.end))
+    .filter(e => e.cp.after(p.start))
     .filter(e => pattern.forall(_.matcher(e.change.rel.name).matches()))
 
+  private val rows = new PgWalRows
   private var current: WalFiles.WalEvent = _
 
   override def next(): Boolean = {
@@ -277,12 +292,21 @@ final class PgWalPartitionReader(p: PgWalPartition)
     } else false
   }
 
-  override def get(): InternalRow = PgWalRows.toRow(current)
+  override def get(): InternalRow = rows.toRow(current)
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     PgScanMetrics.values(tally)
 
-  override def close(): Unit = ()
+  override def close(): Unit = {
+    PgWalPartitionReader.framesDecoded.addAndGet(tally.frames); ()
+  }
+}
+
+object PgWalPartitionReader {
+  /** Frames decoded by every closed streaming reader in this JVM —
+    * instrumentation proving the O(window) read contract (CdcSourceSpec),
+    * like [[WalTail.framesDecoded]] for the driver side. */
+  val framesDecoded = new java.util.concurrent.atomic.AtomicLong
 }
 
 /** DSv2 custom metrics for the pgcapture scan: delivered op=TRUNCATE
@@ -314,32 +338,75 @@ private[sources] object PgScanMetrics {
 }
 
 /** Envelope row construction shared by the streaming and batch
-  * readers. */
-private[sources] object PgWalRows {
-  def toRow(e: WalFiles.WalEvent): InternalRow = {
-    val ch = e.change
-    val rel = ch.rel
-    def mapData(m: Option[Map[String, Array[Byte]]]) = m.map { mm =>
+  * readers, one instance per reader.
+  *
+  * The per-relation parts of a row — the `schema`/`table` strings, the
+  * `oids` map, the `keys` array and the sorted column order of the
+  * `new`/`old` maps — are built once per relation, not once per row.
+  * They are memoised by reference identity (the decoder hands out one
+  * Relation object per 'R' frame) in a small memo that is cleared when
+  * full, since every op=MESSAGE row carries a fresh synthetic Relation.
+  * A tuple whose keys are not exactly the relation's columns (absent
+  * unchanged-TOAST columns, key-only old images) sorts its own keys,
+  * so map entry order is always the keys' sorted order. */
+private[sources] final class PgWalRows {
+  import PgWalRows.RelParts
+
+  private val memo =
+    new java.util.IdentityHashMap[PgOutput.Relation, RelParts]()
+
+  private def parts(rel: PgOutput.Relation): RelParts = {
+    var rp = memo.get(rel)
+    if (rp == null) {
+      if (memo.size >= PgWalRows.MemoSize) memo.clear()
+      rp = new RelParts(rel)
+      memo.put(rel, rp)
+    }
+    rp
+  }
+
+  private def mapData(m: Option[Map[String, Array[Byte]]],
+      rp: RelParts): ArrayBasedMapData = m match {
+    case None => null
+    case Some(mm) if mm.size == rp.sorted.length &&
+        rp.sorted.forall(mm.contains) =>
+      new ArrayBasedMapData(rp.sortedKeys,
+        new GenericArrayData(rp.sorted.map(k => mm(k): Any)))
+    case Some(mm) =>
       val ks = mm.keys.toArray.sorted
       new ArrayBasedMapData(
         new GenericArrayData(ks.map(k => UTF8String.fromString(k): Any)),
         new GenericArrayData(ks.map(k => mm(k): Any)))
-    }.orNull
-    val oids = {
-      val cols = rel.columns.toArray
-      new ArrayBasedMapData(
-        new GenericArrayData(cols.map(c => UTF8String.fromString(c.name): Any)),
-        new GenericArrayData(cols.map(c => c.oid: Any)))
-    }
+  }
+
+  def toRow(e: WalFiles.WalEvent): InternalRow = {
+    val ch = e.change
+    val rp = parts(ch.rel)
     new GenericInternalRow(Array[Any](
-      UTF8String.fromString(ch.op),
-      UTF8String.fromString(rel.namespace),
-      UTF8String.fromString(rel.name),
-      mapData(ch.newTuple), mapData(ch.oldTuple), oids,
+      UTF8String.fromString(ch.op), rp.namespace, rp.name,
+      mapData(ch.newTuple, rp), mapData(ch.oldTuple, rp), rp.oids,
       e.cp.lsn, e.cp.seq,
       e.commitTimeUs + graft.codec.PgType.PgEpochMicros,
-      new GenericArrayData(rel.columns.filter(_.isKey)
-        .map(c => UTF8String.fromString(c.name): Any).toArray)))
+      rp.keys))
+  }
+}
+
+private[sources] object PgWalRows {
+  final val MemoSize = 64
+
+  /** The row parts that depend only on the relation. */
+  final class RelParts(rel: PgOutput.Relation) {
+    private def utf8(s: String): Any = UTF8String.fromString(s)
+    val namespace: UTF8String = UTF8String.fromString(rel.namespace)
+    val name: UTF8String = UTF8String.fromString(rel.name)
+    val oids = new ArrayBasedMapData(
+      new GenericArrayData(rel.columns.map(c => utf8(c.name)).toArray),
+      new GenericArrayData(rel.columns.map(c => c.oid: Any).toArray))
+    val keys = new GenericArrayData(
+      rel.columns.filter(_.isKey).map(c => utf8(c.name)).toArray)
+    /** Column names in map-key (sorted) order. */
+    val sorted: Array[String] = rel.columns.map(_.name).toArray.sorted
+    val sortedKeys = new GenericArrayData(sorted.map(utf8))
   }
 }
 
@@ -368,6 +435,7 @@ final class PgWalBatchReader(p: PgWalBatchPartition)
     .filter(e => startCp.forall(c => e.cp.after(c)))
     .filter(e => pattern.forall(_.matcher(e.change.rel.name).matches()))
 
+  private val rows = new PgWalRows
   private var current: WalFiles.WalEvent = _
 
   override def next(): Boolean =
@@ -380,7 +448,7 @@ final class PgWalBatchReader(p: PgWalBatchPartition)
       true
     } else false
 
-  override def get(): InternalRow = PgWalRows.toRow(current)
+  override def get(): InternalRow = rows.toRow(current)
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     PgScanMetrics.values(tally)

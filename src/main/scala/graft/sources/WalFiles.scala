@@ -12,12 +12,20 @@ import graft.codec.{BytesReader, BytesWriter, PgOutput, PgType}
   * works the same way a replication client's restart_lsn does: each
   * segment file `wal-<16-hex-lsn>.seg` is named by the LSN of its
   * first transaction, and frames inside are `[u32 length][pgoutput
-  * message bytes]`. A reader resuming from checkpoint (lsn, seq) skips
-  * every segment whose successor starts at or below the checkpoint,
-  * replays the containing segment from its start, and drops already-
-  * seen messages with the consistency-gate filter — exactly the
-  * reference's resume path (pkg/source/pulsar.go:122-148 gate;
-  * pkg/source/postgres.go:51-163 slot restart).
+  * message bytes]`. A reader of the window `(start, end]` bounds its
+  * work at both ends:
+  *  - start: it skips every segment whose successor starts at or below
+  *    `start`, replays the containing segment from its first frame,
+  *    and drops already-seen messages with the consistency-gate filter
+  *    — the reference's resume path (pkg/source/pulsar.go:122-148
+  *    gate; pkg/source/postgres.go:51-163 slot restart);
+  *  - end: it stops at the first event whose checkpoint is after
+  *    `end`, so no frame past that event is decoded and no later
+  *    segment is read. The stop is event-driven, never by segment
+  *    name: a segment may open with the continuation frames of a
+  *    transaction whose Begin lives in the previous segment (see
+  *    [[truncateAcked]]), so a segment named above `end.lsn` can
+  *    still hold rows at or below `end`.
   *
   * The sandbox has no live PostgreSQL, so this is the capture feed the
   * DSv2 source reads; against a real server the same MicroBatchStream
@@ -102,18 +110,21 @@ object WalFiles {
     * reports its tally as DSv2 custom task metrics (Spark sums them
     * across executors into the scan node's metrics); the JVM-level
     * [[truncateFrames]]/[[unknownFrames]] mirror feeds the
-    * GraftMetricsListener gauge. */
+    * GraftMetricsListener gauge. `frames` counts every frame the
+    * reader's replay decoded, the figure behind the O(window) read
+    * contract. */
   final class SkipTally {
     var truncates: Long = 0L
     var unknowns: Long = 0L
+    var frames: Long = 0L
   }
   /** JVM-level counters (per-executor on a cluster — the cluster-wide
     * aggregate is the scan's custom metric; this mirror is the
     * driver-visible gauge in local mode and a per-executor log signal
     * otherwise). [[truncateFrames]] counts delivered truncate control
     * rows; [[unknownFrames]] counts skipped unknown frames, scoped to
-    * the batch window via `tallyFrom` (ADVICE r14: a frame replayed
-    * across micro-batches must not be recounted). */
+    * the batch window via `tallyFrom`/`tallyTo`: a frame replayed
+    * across micro-batches must not be recounted. */
   val truncateFrames = new java.util.concurrent.atomic.AtomicLong
   val unknownFrames = new java.util.concurrent.atomic.AtomicLong
 
@@ -125,20 +136,23 @@ object WalFiles {
     * relation, each taking a seq slot (so checkpoints stay dense and
     * WalTail/planBatch agree on offsets).
     *
-    * `tallyFrom` windows the unknown-frame count: a reader resuming
-    * mid-segment replays already-delivered frames, and counting those
-    * again every micro-batch overstates the gauge (ADVICE r14) — only
-    * frames whose transaction still has undelivered rows past
-    * `tallyFrom` count. */
+    * `tallyFrom`/`tallyTo` window the unknown-frame count to
+    * `(tallyFrom, tallyTo]`: a reader resuming mid-segment replays
+    * already-delivered frames, and one that stops at its batch end
+    * still decodes the frames just before the first event past it —
+    * counting either again in the neighbouring micro-batch overstates
+    * the gauge. Every frame decoded is counted in `tally.frames`. */
   def replay(segs: Seq[Path],
       decoder: PgOutput.WireDecoder = new PgOutput.Decoder,
       startLsn: Long = 0L, startSeq: Int = 0,
       startCommitUs: Long = 0L, tally: SkipTally = null,
-      tallyFrom: Checkpoint = Checkpoint.Zero): Iterator[WalEvent] = {
+      tallyFrom: Checkpoint = Checkpoint.Zero,
+      tallyTo: Checkpoint = Checkpoint.Max): Iterator[WalEvent] = {
     var lsn = startLsn
     var seq = startSeq
     var commitUs = startCommitUs
     segs.iterator.flatMap(readFrames).flatMap { frame =>
+      if (tally != null) tally.frames += 1
       decoder.decode(frame) match {
         case PgOutput.Begin(finalLsn, ts, _) =>
           lsn = finalLsn; seq = 0; commitUs = ts; None
@@ -175,8 +189,10 @@ object WalFiles {
           // skip + advance, never throw, zero rows (r13 ask #4) — and
           // counted only inside the batch window: the frame sits at
           // would-be checkpoint (lsn, seq+1), so a tx fully delivered
-          // before `tallyFrom` never recounts on replay
-          if (Checkpoint(lsn, seq + 1).after(tallyFrom)) {
+          // before `tallyFrom` never recounts on replay, and a frame
+          // past `tallyTo` is left to the batch that delivers it
+          val cp = Checkpoint(lsn, seq + 1)
+          if (cp.after(tallyFrom) && !cp.after(tallyTo)) {
             unknownFrames.incrementAndGet()
             if (tally != null) tally.unknowns += 1
           }

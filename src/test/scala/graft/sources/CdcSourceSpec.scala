@@ -34,10 +34,25 @@ class CdcSourceSpec extends AnyFunSuite {
     PgOutput.Encoder.delete(rel, Seq(PgType.encode(PgType.Int8, id), null))
 
   private def runStream(walDir: String, ckDir: String,
-      tables: Option[String] = None): Seq[(String, String, Long, Long, Int)] = {
+      tables: Option[String] = None): Seq[(String, String, Long, Long, Int)] =
+    runBatches(walDir, ckDir, tables).flatten
+
+  /** (op, table, new id or -1, lsn, seq) of every delivered row. */
+  private def idRow(op: String, table: String,
+      nf: Map[String, Array[Byte]], lsn: Long, seq: Int) =
+    (op, table, nf.get("id").map(d =>
+      PgType.decode(PgType.Int8, d).asInstanceOf[Long]).getOrElse(-1L),
+      lsn, seq)
+
+  /** Drains the feed under AvailableNow; one entry per micro-batch run,
+    * in batch order. */
+  private def runBatches(walDir: String, ckDir: String,
+      tables: Option[String] = None, opts: Map[String, String] = Map.empty)
+      : Seq[Seq[(String, String, Long, Long, Int)]] = {
     val spark = SparkTestSession.spark
-    val out = scala.collection.mutable.Buffer.empty[(String, String, Long, Long, Int)]
+    val out = scala.collection.mutable.Buffer.empty[Seq[(String, String, Long, Long, Int)]]
     val reader = spark.readStream.format("pgcapture").option("path", walDir)
+      .options(opts)
     tables.foreach(reader.option("tables", _))
     val q = reader.load()
       .writeStream
@@ -45,15 +60,13 @@ class CdcSourceSpec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         out.synchronized {
-          out ++= batch.select("op", "table", "lsn", "seq", "new")
+          out += batch.select("op", "table", "lsn", "seq", "new")
             .collect()
             .map { r =>
               val nf = if (r.isNullAt(4)) Map.empty[String, Array[Byte]]
                 else r.getMap[String, Array[Byte]](4).toMap
-              val id = nf.get("id").map(d =>
-                PgType.decode(PgType.Int8, d).asInstanceOf[Long]).getOrElse(-1L)
-              (r.getString(0), r.getString(1), id, r.getLong(2), r.getInt(3))
-            }
+              idRow(r.getString(0), r.getString(1), nf, r.getLong(2), r.getInt(3))
+            }.toSeq
         }
         ()
       }.start()
@@ -155,6 +168,101 @@ class CdcSourceSpec extends AnyFunSuite {
     val l = new graft.streaming.GraftMetricsListener()
     assert(l.truncateEventsDelivered == WalFiles.truncateFrames.get())
     assert(l.unknownFramesSkipped == WalFiles.unknownFrames.get())
+  }
+
+  test("an unknown frame counts once when admission control splits the feed") {
+    // the walU shape above at one change per batch: batch 1 = (100,1)
+    // stops on tx 101's first row, decoding the origin frame at
+    // would-be checkpoint (100,2) on the way — it belongs to batch 2's
+    // window and must be counted there only
+    val walU = Files.createTempDirectory("walUm").toString
+    val rows2 = tx(101L, ins(rel, 2, 20), upd(1, 11))
+    WalFiles.writeSegment(walU, 100L,
+      PgOutput.Encoder.relation(rel) +: (tx(100L, ins(rel, 1, 10)) ++
+        (PgOutput.Encoder.origin(55L, "src_a") +: rows2)))
+    val u0 = WalFiles.unknownFrames.get()
+    val batches = runBatches(walU, Files.createTempDirectory("ckUm").toString,
+      opts = Map("maxChangesPerBatch" -> "1"))
+    assert(batches.map(_.map(e => (e._4, e._5))) == Seq(
+      Seq((100L, 1)), Seq((101L, 1), (101L, 2))))
+    assert(WalFiles.unknownFrames.get() - u0 == 1, "one origin frame, counted once")
+  }
+
+  test("the streaming reader decodes O(window) frames per batch, not the rest of the feed") {
+    // 20 segments of three txs each; segment k starts at lsn 1000+10k.
+    // Every tx ends with an audit row, so a t1-only scope filters out
+    // each batch's last in-window rows. Tx 1105 (8 changes, over the
+    // cap of 6) begins in segment 10 and commits in segment 11, so one
+    // batch ends inside segment 11, on the continuation frames.
+    val walDir = Files.createTempDirectory("walW").toString
+    var id = 0L
+    def txOf(lsn: Long, t1Rows: Int): Seq[Array[Byte]] = {
+      val t1 = (1 to t1Rows).map { _ => id += 1; ins(rel, id, id.toInt) }
+      id += 1
+      tx(lsn, t1 :+ ins(rel2, id, 0): _*)
+    }
+    var carry = Seq.empty[Array[Byte]]
+    (0 until 20).foreach { k =>
+      val first = 1000L + 10 * k
+      val rels = if (k == 0)
+        Seq(PgOutput.Encoder.relation(rel), PgOutput.Encoder.relation(rel2))
+      else Seq.empty
+      val own = (0 until 3).flatMap(j => txOf(first + j, 1 + j))
+      val (tail, next) =
+        if (k == 10) txOf(first + 5, 7).splitAt(4) // Begin + 3 rows here
+        else (Seq.empty, Seq.empty)
+      WalFiles.writeSegment(walDir, first, rels ++ carry ++ own ++ tail)
+      carry = next
+    }
+    val segs = WalFiles.segments(walDir).map(_._2)
+    val segFrames = segs.map(WalFiles.readFrames(_).size)
+    val expected = WalFiles.replay(segs).map(e => idRow(e.change.op,
+      e.change.rel.name, e.change.newTuple.get, e.cp.lsn, e.cp.seq)).toSeq
+
+    Seq(None, Some("t1")).foreach { scope =>
+      val f0 = PgWalPartitionReader.framesDecoded.get()
+      val batches = runBatches(walDir, Files.createTempDirectory("ckW").toString,
+        tables = scope, opts = Map("maxChangesPerBatch" -> "6"))
+      val decoded = PgWalPartitionReader.framesDecoded.get() - f0
+      assert(batches.flatten == expected.filter(e => scope.forall(_ == e._2)),
+        s"scope $scope: delivered rows must equal the feed's replay")
+      assert(batches.size >= 10, s"the feed drains in many batches: ${batches.size}")
+      assert(decoded <= segFrames.sum + batches.size * segFrames.max,
+        s"scope $scope: $decoded frames decoded for a feed of ${segFrames.sum} " +
+          s"frames in ${batches.size} batches")
+      if (scope.isEmpty) {
+        assert(batches.exists(_.lastOption.exists(e => (e._4, e._5) == (1105L, 8))),
+          "one batch ends on the spanning tx's continuation")
+        assert(batches.forall(_.lastOption.forall(_._2 == "audit")))
+      }
+    }
+  }
+
+  test("envelope rows share per-relation parts and keep map keys sorted") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val wide = R(3, "public", "wide", 'd', Seq(C("z", PgType.Int8, isKey = true),
+      C("a", PgType.Text, isKey = false), C("m", PgType.Int4, isKey = false)))
+    val z = PgType.encode(PgType.Int8, 7L)
+    val m = PgType.encode(PgType.Int4, 3)
+    val rows = new PgWalRows
+    def row(seq: Int, nt: Map[String, Array[Byte]],
+        ot: Option[Map[String, Array[Byte]]]) = rows.toRow(WalFiles.WalEvent(
+      Checkpoint(7L, seq), 0L, PgOutput.Change("UPDATE", wide, Some(nt), ot)))
+    def entries(md: org.apache.spark.sql.catalyst.util.MapData) =
+      md.keyArray().toSeq[Any](StringType).map(_.toString)
+        .zip(md.valueArray().toSeq[Array[Byte]](BinaryType).map(Option(_).map(_.toSeq)))
+    val full = row(1, Map("m" -> m, "z" -> z, "a" -> null), Some(Map("z" -> z)))
+    // unchanged TOAST: `a` is absent from the new image
+    val toast = row(2, Map("z" -> z, "m" -> m), None)
+    assert(entries(full.getMap(3)) ==
+      Seq("a" -> None, "m" -> Some(m.toSeq), "z" -> Some(z.toSeq)))
+    assert(entries(full.getMap(4)) == Seq("z" -> Some(z.toSeq)))
+    assert(entries(toast.getMap(3)) == Seq("m" -> Some(m.toSeq), "z" -> Some(z.toSeq)))
+    assert(toast.isNullAt(4))
+    assert(full.getMap(5) eq toast.getMap(5), "oids built once per relation")
+    assert(full.getArray(9) eq toast.getArray(9), "keys built once per relation")
+    assert(full.getArray(9).toSeq[Any](StringType).map(_.toString) == Seq("z"))
+    assert(full.getUTF8String(2).toString == "wide")
   }
 
   test("logical messages are first-class control rows with dense checkpoints (r15)") {
